@@ -3,21 +3,19 @@ package graft.streaming
 import graft.sources.{AsyncCompactor, Lake}
 import org.apache.spark.sql.SparkSession
 
-/** Per-store compaction cadence shared by the incremental ingest loops
-  * ([[IncrementalDedup]] / [[IncrementalScd2]] / [[IncrementalAnn]] /
-  * [[IncrementalBm25]] / the sketch-family stores): every micro-batch
-  * appends one file set, so a long-running loop's store read goes
-  * footer-bound without periodic folding — the measured 300-batch
-  * replay (BASELINE.md r16/r17) put the crossover at ~500–700 store
-  * files, with the async arm (rewrite off the trigger, swap at a later
-  * trigger boundary) winning the per-batch average.
+/** Per-store compaction cadence, one per store of a [[StoreLoop]]:
+  * every micro-batch appends one file set, so a long-running loop's
+  * store read goes footer-bound without periodic folding — the measured
+  * 300-batch replay (BASELINE.md r16/r17) put the crossover at ~500–700
+  * store files, with the async arm (rewrite off the trigger, swap at a
+  * later trigger boundary) winning the per-batch average.
   *
-  * One instance per store. Call [[finishPending]] FIRST at each
-  * trigger (before the batch reads the store) and [[maybeCompact]]
-  * after the batch's append — both on the loop thread, which
-  * `foreachBatch` guarantees is the only appender. Content is
-  * preserved row-for-row (the `ingest_batch` stamp is a data column),
-  * so replay idempotence survives any rewrite.
+  * [[StoreLoop.attach]] calls [[finishPending]] FIRST at each trigger
+  * (before the batch reads the store) and [[maybeCompact]] after the
+  * batch's append — both on the loop thread, which `foreachBatch`
+  * guarantees is the only appender. Content is preserved row-for-row
+  * (the `ingest_batch` stamp is a data column), so replay idempotence
+  * survives any rewrite.
   *
   * Guidance (measured): leave the cadence OFF for short-lived loops —
   * below the file-count crossover the rewrites cost more than they
@@ -36,10 +34,10 @@ private[streaming] final class CompactCadence(
     storeDir: String,
     every: Option[Int],
     async: Boolean,
-    targetBytes: Long = 128L * 1024 * 1024,
-    sortCols: Seq[String] = Nil,
-    rangeCols: Seq[String] = Nil,
-    offset: Int = 0
+    targetBytes: Long,
+    sortCols: Seq[String],
+    rangeCols: Seq[String],
+    offset: Int
 ) {
   require(every.forall(_ > 0), "compactEvery must be positive")
 

@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DriftMonitor {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreGuard.BatchCol
 
   /** Persist the reference distribution's dense bin counts. */
   def seedReference(

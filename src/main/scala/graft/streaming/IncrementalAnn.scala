@@ -41,8 +41,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalAnn {
 
-  private[graft] val BatchCol = "ingest_batch"
-
   /** Initialize the store: assign every corpus vector to its cell. */
   def seed(
       corpus: DataFrame,
@@ -53,7 +51,7 @@ object IncrementalAnn {
       assignPlanes: Option[Int] = None
   ): Unit =
     assigned(corpus, centroids, idCol, vecCol, assignPlanes)
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
 
   /** Assign one arriving batch and append it to the index.
@@ -72,18 +70,9 @@ object IncrementalAnn {
       assignPlanes: Option[Int] = None,
       probeReplay: Boolean = true
   ): Boolean = {
-    // a crash inside a compaction swap can leave the live dir set aside
-    // (two existence checks when healthy — see Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    val rows = assigned(batch, centroids, idCol, vecCol, assignPlanes)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-    rows.write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, rows.count())
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark, assigned(batch, centroids, idCol, vecCol, assignPlanes),
+      batchId, storeDir)
     true
   }
 
@@ -102,7 +91,7 @@ object IncrementalAnn {
   ): DataFrame =
     Similarity.topKAgainstCells(
       queries,
-      spark.read.parquet(storeDir).drop(BatchCol),
+      spark.read.parquet(storeDir).drop(StoreGuard.BatchCol),
       centroids, idCol, vecCol, k, nprobe)
 
   /** Drive the loop from a stream of arriving vectors; `compactEvery`
@@ -122,25 +111,12 @@ object IncrementalAnn {
       compactEvery: Option[Int] = None,
       compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      compactTargetBytes, sortCols = Seq("cell"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, centroids, idCol, vecCol,
-            batchId = Some(bid), assignPlanes = assignPlanes,
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir, sortCols = Seq("cell"))),
+      checkpointLocation, compactEvery, compactTargetBytes, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, centroids, idCol, vecCol,
+        batchId = Some(bid), assignPlanes = assignPlanes, probeReplay = probe)
+    }
 
   private def assigned(
       vectors: DataFrame,

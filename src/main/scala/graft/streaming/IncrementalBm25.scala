@@ -24,8 +24,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalBm25 {
 
-  private[graft] val BatchCol = "ingest_batch"
-
   private def tfOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol), split(col(textCol), " ").as("__toks"))
@@ -42,7 +40,7 @@ object IncrementalBm25 {
       textCol: String = "text"
   ): Unit =
     tfOf(corpus, idCol, textCol)
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
 
   /** Append one micro-batch's tf rows; replay-idempotent with
@@ -60,34 +58,8 @@ object IncrementalBm25 {
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
   ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (two existence checks when healthy — see
-    // Lake.recoverCompact; same per-trigger discipline as the dedup
-    // and SCD2 loops)
-    graft.sources.Lake.recoverCompact(storeDir)
-    // StoreGuard tolerates a missing/partial store, so `attach` without
-    // a prior `seed` bootstraps it on the first micro-batch instead of
-    // dying on AnalysisException inside foreachBatch
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // Materialize once, size the append fan-out from the known row
-    // count (one file per ~50k tf rows — StoreGuard.appendParts; r20,
-    // the r19 dedup-loop discipline): the tf agg otherwise inherits
-    // shuffle partitioning and appends one near-empty file per shuffle
-    // partition per trigger. The count also feeds the loop-health event
-    // without a second tokenize pass.
-    val tf = tfOf(batch, idCol, textCol)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = tf.count()
-    if (nRows > 0)
-      tf.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, nRows)
-    tf.unpersist()
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark, tfOf(batch, idCol, textCol), batchId, storeDir)
     true
   }
 
@@ -100,7 +72,7 @@ object IncrementalBm25 {
       storeDir: String,
       idCol: String = "doc_id"
   ): Bm25Index = {
-    val tf = spark.read.parquet(storeDir).drop(BatchCol)
+    val tf = spark.read.parquet(storeDir).drop(StoreGuard.BatchCol)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val docs = tf.select(col(idCol), col("dl")).groupBy(col(idCol))
       .agg(max(col("dl")).as("dl"))
@@ -133,22 +105,10 @@ object IncrementalBm25 {
       compactEvery: Option[Int] = None,
       compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      compactTargetBytes, rangeCols = Seq("term"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, idCol, textCol, batchId = Some(bid),
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir, rangeCols = Seq("term"))),
+      checkpointLocation, compactEvery, compactTargetBytes, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, idCol, textCol, batchId = Some(bid),
+        probeReplay = probe)
+    }
 }

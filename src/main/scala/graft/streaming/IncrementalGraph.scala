@@ -30,8 +30,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalGraph {
 
-  private[graft] val BatchCol = "ingest_batch"
-
   /** Write the initial edge store (`ingest_batch = -1`). */
   def seed(
       edges: DataFrame,
@@ -41,7 +39,7 @@ object IncrementalGraph {
   ): Unit =
     edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
 
   /** Append one micro-batch's edges; replay-idempotent with `batchId`
@@ -59,19 +57,9 @@ object IncrementalGraph {
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
   ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (cheap when healthy — Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    val rows = batch
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-    rows.write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, rows.count())
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark, batch.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      batchId, storeDir)
     true
   }
 
@@ -156,22 +144,10 @@ object IncrementalGraph {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      rangeCols = Seq("src"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, srcCol, dstCol, batchId = Some(bid),
-            probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir, rangeCols = Seq("src"))),
+      checkpointLocation, compactEvery, asyncCompact = asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, srcCol, dstCol, batchId = Some(bid),
+        probeReplay = probe)
+    }
 }

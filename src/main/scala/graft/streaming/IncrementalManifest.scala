@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalManifest {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreGuard.BatchCol
 
   /** Write the initial manifest store from an existing corpus
     * (`ingest_batch = -1`), establishing the stamped schema.
@@ -62,31 +62,10 @@ object IncrementalManifest {
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
   ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (cheap when healthy — Lake.recoverCompact)
-    Lake.recoverCompact(storeDir)
-    batchId match {
-      // StoreGuard tolerates a missing/partial store: attach-without-seed
-      // bootstraps on the first micro-batch (see StoreGuard scaladoc);
-      // probeReplay = false skips the probe (StoreGuard.ReplayProbe)
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // Materialize once and size the append fan-out from the known row
-    // count (≤ nShards per batch by construction — StoreGuard.appendParts
-    // keeps a micro-batch's manifest rows in one file instead of one
-    // near-empty file per post-shuffle partition; r20). The count also
-    // feeds the loop-health event without re-running the manifest agg.
-    val rows = Lake.shardManifest(batch, idCol, contentCols, nShards, seed, tokenCol, family)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = rows.count()
-    if (nRows > 0)
-      rows.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, nRows)
-    rows.unpersist()
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark,
+      Lake.shardManifest(batch, idCol, contentCols, nShards, seed, tokenCol, family),
+      batchId, storeDir)
     true
   }
 
@@ -117,24 +96,12 @@ object IncrementalManifest {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
+  ): StreamingQuery =
     // ≤nShards KB-scale rows per batch, but one FILE SET per batch:
     // compactEvery folds the accretion back, shard-sorted
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact,
-      sortCols = Seq("shard"))
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, idCol, contentCols, nShards, seed,
-            tokenCol, family, batchId = Some(bid), probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir, sortCols = Seq("shard"))),
+      checkpointLocation, compactEvery, asyncCompact = asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, idCol, contentCols, nShards, seed,
+        tokenCol, family, batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Continuously-maintained SCD type-2 history — the streaming face of
   * [[History.scd2]]: an arriving changelog keeps a persisted,
   * ever-growing versioned-history store current, the same
-  * foreachBatch-against-persisted-state loop as [[IncrementalDedup]].
+  * micro-batch-against-persisted-state loop as [[IncrementalDedup]].
   *
   * Store model: an APPEND-ONLY log of collapsed CHANGE rows (key,
   * attrs, ts, tie, batch stamp). Nothing is ever rewritten in place —
@@ -35,7 +35,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      every batch boundary would fabricate a version);
   *   4. append the surviving change rows, stamped with the batch id.
   *
-  * Exactly-once: foreachBatch replays a batch after failure; appends
+  * Exactly-once: a streaming loop replays a batch after failure; appends
   * are job-atomic (files commit at job end), so replay idempotence is
   * skip-if-present on the `ingest_batch` stamp, and the open-version
   * read EXCLUDES the batch's own stamp so a replay recomputes against
@@ -50,7 +50,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalScd2 {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private val BatchCol = StoreGuard.BatchCol
 
   /** The open-version HEAD store: the log-compacted head of the change
     * log (exactly Kafka compacted-topic semantics — latest row per
@@ -101,19 +101,10 @@ object IncrementalScd2 {
       batchId: Option[Long],
       probeReplay: Boolean = true
   ): Boolean = {
-    // a crash inside a version-log compaction swap can leave the live
-    // dir set aside (cheap when healthy — see Lake.recoverCompact; the
-    // open-version HEAD has its own recovery below)
-    graft.sources.Lake.recoverCompact(storeDir)
-    // attach-without-seed bootstrap (the BM25/sketches/ANN StoreGuard
-    // contract): a missing store is an EMPTY store, so the first
-    // micro-batch creates it instead of dying inside foreachBatch.
-    // Lazy: on the steady-state path (probe skipped, open head intact)
-    // the version log is never LISTED here — only appended to below.
-    lazy val storeOpt = StoreGuard.readStore(spark, storeDir)
-    if (probeReplay &&
-        batchId.exists(b => storeOpt.exists(s => !s.filter(col(BatchCol) === b).isEmpty)))
-      return false // replayed batch: append already committed, recompute is a no-op
+    // the version log is the replay commit point (the open-version HEAD
+    // has its own recovery below); a missing log is an EMPTY store, so
+    // the first micro-batch of an attach-without-seed creates it
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
 
     val cols = (keyCols ++ attrCols ++ (tsCol +: tieBreak)).map(col)
     val withinBatch =
@@ -130,7 +121,7 @@ object IncrementalScd2 {
     // other key's open version); no store at all reads as empty — the
     // attach-without-seed bootstrap.
     val openStore = StoreGuard.readStore(spark, openDir(storeDir)).getOrElse {
-      storeOpt match {
+      StoreGuard.readStore(spark, storeDir) match {
         case Some(log) =>
           // one O(log) copy on the rare crash-recovery path; the
           // end-of-batch fold collapses it back to one row per key
@@ -170,34 +161,19 @@ object IncrementalScd2 {
     // change plan READS the open store, and the head append MODIFIES
     // it — an unpinned second append would re-execute the whole
     // window+join chain (2× the per-trigger compute) against a store
-    // the first append just changed (correct only while Spark's cached
-    // file-index snapshot holds — the same hazard the dedup loop
-    // pins against). The count doubles as the append fan-out size and
-    // the loop-health rows figure, and it sees the PRE-append state by
-    // construction.
-    val stamped = changes.withColumn(BatchCol, lit(batchId.getOrElse(-1L))).persist()
-    val nChanges = stamped.count()
-    // ordering is load-bearing: head append first, version-log append
+    // the first append just changed. StoreLoop.append pins them, and
+    // its count sees the PRE-append state by construction.
+    // Ordering is load-bearing: head append first, version-log append
     // second (the COMMIT point the replay check reads), head fold LAST.
     // A crash between the appends leaves stamped head rows that the
     // next run (a replay of this batch) excludes and re-appends —
     // duplicates carry identical payloads, so the fold's latest-per-key
     // collapse is unaffected. The fold never destroys pre-batch state
-    // until the batch is committed in the version log.
-    // Zero-change batches skip the appends AND the fold outright (r20,
-    // the dedup loop's zero-survivor discipline): an empty append still
-    // grows both stores' file counts, and a replay of an all-unchanged
-    // batch recomputes to the same no-op. The success EVENT publishes
-    // only AFTER both appends commit: a failed append must not leave a
-    // success=true batch.ingested for a batch that never landed
-    // (r17 ADVICE).
-    if (nChanges > 0) {
-      val out = stamped.coalesce(StoreGuard.appendParts(spark, nChanges))
-      out.write.mode("append").parquet(openDir(storeDir))
-      out.write.mode("append").parquet(storeDir)
-    }
-    RuntimeEventBus.ingested(storeDir, batchId, nChanges)
-    stamped.unpersist()
+    // until the batch is committed in the version log. Zero-change
+    // batches skip the appends AND the fold (an empty append still grows
+    // both stores' file counts); the success event publishes only after
+    // both appends commit (r17 ADVICE).
+    val nChanges = StoreLoop.append(spark, changes, batchId, openDir(storeDir), storeDir)
     if (nChanges > 0)
       foldOpen(spark, storeDir, keyCols, tsCol, attrCols, tieBreak)
     true
@@ -280,7 +256,7 @@ object IncrementalScd2 {
     *   loop accumulates one file set per micro-batch and the store
     *   read in step 2 becomes footer-bound. The `ingest_batch` stamp
     *   is a data COLUMN, so replay idempotence survives the rewrite;
-    *   compaction only needs the store quiescent, which foreachBatch
+    *   compaction only needs the store quiescent, which [[StoreLoop]]
     *   guarantees (batches of one query never overlap).
     */
   def attach(
@@ -294,26 +270,14 @@ object IncrementalScd2 {
       compactEvery: Option[Int] = None,
       compactTargetBytes: Long = 128L * 1024 * 1024,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
+  ): StreamingQuery =
     // asyncCompact: rewrite off the trigger path, swap at a later
     // trigger boundary (the IncrementalDedup discipline — measured
     // guidance on that attach's scaladoc). Applies to the version LOG;
     // the open-version HEAD is already folded in-place per batch.
-    val cadence = new CompactCadence(
-      spark, storeDir, compactEvery, asyncCompact, compactTargetBytes)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, keyCols, tsCol, attrCols, tieBreak,
-            batchId = Some(bid), probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir)), checkpointLocation,
+      compactEvery, compactTargetBytes, asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, keyCols, tsCol, attrCols, tieBreak,
+        batchId = Some(bid), probeReplay = probe)
+    }
 }

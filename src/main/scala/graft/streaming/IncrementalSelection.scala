@@ -32,13 +32,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * already paying), and the model refresh is free.
   *
   * Exactly-once: the [[StoreGuard]] stamp discipline — a replayed
-  * `foreachBatch` invocation sees its own batch id in the store and
+  * micro-batch sees its own batch id in the store and
   * no-ops; counting is deterministic, so a repaired append carries
   * identical content.
   */
 object IncrementalSelection {
-
-  private[graft] val BatchCol = "ingest_batch"
 
   /** The store's hash-parameter metadata lives in a one-row parquet
     * UNDER the store dir. The `_` prefix makes Spark's file index skip
@@ -121,7 +119,7 @@ object IncrementalSelection {
     // counts first, meta second: the overwrite deletes the whole store
     // dir (including a prior _graft_meta), so the stamp must follow it
     countsRow(df, textCol, isTarget, buckets, n, family)
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
     writeMeta(df.sparkSession, storeDir, buckets, n, family)
   }
@@ -146,18 +144,12 @@ object IncrementalSelection {
       batchId: Option[Long] = None,
       probeReplay: Boolean = true
   ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read (the meta sidecar rides inside storeDir, so the swap heal
-    // restores it too — Lake.rescueLateAppends carries subdirs)
-    graft.sources.Lake.recoverCompact(storeDir)
-    if (probeReplay) checkMeta(spark, storeDir, buckets, Some(n), Some(family))
-    batchId match {
-      // StoreGuard tolerates a missing/partial store: attach-without-seed
-      // bootstraps on the first micro-batch (see StoreGuard scaladoc)
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
+    // the meta check runs after the swap heal (the meta sidecar rides
+    // inside storeDir, so the heal restores it too —
+    // Lake.rescueLateAppends carries subdirs) and before the probe
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay,
+        beforeProbe = checkMeta(spark, storeDir, buckets, Some(n), Some(family))))
+      return false
     // Bootstrap-stamp eligibility must be decided BEFORE the append: a
     // legacy pre-metadata store that already holds count rows must NOT
     // get the first post-upgrade caller's parameters stamped as canonical
@@ -176,7 +168,7 @@ object IncrementalSelection {
     val metaAbsent = probeReplay && StoreGuard.readStore(spark, metaDir(storeDir)).isEmpty
     val storeWasEmpty = metaAbsent && StoreGuard.readStore(spark, storeDir).isEmpty
     countsRow(batch, textCol, isTarget, buckets, n, family)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
+      .withColumn(StoreGuard.BatchCol, lit(batchId.getOrElse(-1L)))
       .write.mode("append").parquet(storeDir)
     // the count-store append is exactly one vector row per batch
     RuntimeEventBus.ingested(storeDir, batchId, 1L)
@@ -243,21 +235,10 @@ object IncrementalSelection {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, textCol, isTarget, buckets, n, family,
-            batchId = Some(bid), probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir)), checkpointLocation,
+      compactEvery, asyncCompact = asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, textCol, isTarget, buckets, n,
+        family, batchId = Some(bid), probeReplay = probe)
+    }
 }

@@ -21,14 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus would report.
   *
   * Exactly-once: same `ingest_batch` stamp discipline as
-  * [[IncrementalDedup]] — a replayed `foreachBatch` invocation sees its
+  * [[IncrementalDedup]] — a replayed micro-batch sees its
   * own batch id already in the store and no-ops; sketching is
   * deterministic, so a repaired append carries identical content.
   */
 object IncrementalSketches {
-
-  private[graft] val BatchCol = "ingest_batch"
-
 
   /** Write the initial sketch store from an existing corpus
     * (`ingest_batch = -1`), establishing the stamped schema.
@@ -42,7 +39,7 @@ object IncrementalSketches {
   ): Unit =
     Sketches
       .hllShardSketches(df, shardCols, valueCol, lgK)
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
 
   /** Sketch one micro-batch and append its shard rows to the store.
@@ -60,31 +57,9 @@ object IncrementalSketches {
       lgK: Int = Sketches.DefaultLgK,
       probeReplay: Boolean = true
   ): Boolean = {
-    // heal a compaction the previous run crashed mid-swap BEFORE any
-    // read of the store (cheap when healthy — Lake.recoverCompact)
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      // StoreGuard tolerates a missing/partial store: attach-without-seed
-      // bootstraps on the first micro-batch (see StoreGuard scaladoc)
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // Materialize once and size the append fan-out from the known row
-    // count (StoreGuard.appendParts — shard rows are KB-scale, so a
-    // micro-batch lands in exactly one file instead of one near-empty
-    // file per post-shuffle partition; r20). The count also feeds the
-    // loop-health event without re-running the sketch aggregate.
-    val rows = Sketches
-      .hllShardSketches(batch, shardCols, valueCol, lgK)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = rows.count()
-    if (nRows > 0)
-      rows.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    RuntimeEventBus.ingested(storeDir, batchId, nRows)
-    rows.unpersist()
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark, Sketches.hllShardSketches(batch, shardCols, valueCol, lgK),
+      batchId, storeDir)
     true
   }
 
@@ -110,7 +85,7 @@ object IncrementalSketches {
   ): Unit =
     Sketches
       .kllShardSketches(df, shardCols, valueCol, k)
-      .withColumn(BatchCol, lit(-1L))
+      .withColumn(StoreGuard.BatchCol, lit(-1L))
       .write.mode("overwrite").parquet(storeDir)
 
   /** Sketch one micro-batch's quantile state and append — same stamped
@@ -130,22 +105,9 @@ object IncrementalSketches {
       k: Int = Sketches.DefaultKllK,
       probeReplay: Boolean = true
   ): Boolean = {
-    graft.sources.Lake.recoverCompact(storeDir)
-    batchId match {
-      case Some(b) if probeReplay && StoreGuard.hasBatch(spark, storeDir, BatchCol, b) =>
-        return false
-      case _ => ()
-    }
-    // same sized-fan-out discipline as [[ingestBatch]] (r20)
-    val rows = Sketches
-      .kllShardSketches(batch, shardCols, valueCol, k)
-      .withColumn(BatchCol, lit(batchId.getOrElse(-1L)))
-      .persist()
-    val nRows = rows.count()
-    if (nRows > 0)
-      rows.coalesce(StoreGuard.appendParts(spark, nRows))
-        .write.mode("append").parquet(storeDir)
-    rows.unpersist()
+    if (StoreLoop.replayed(spark, storeDir, batchId, probeReplay)) return false
+    StoreLoop.append(spark, Sketches.kllShardSketches(batch, shardCols, valueCol, k),
+      batchId, storeDir)
     true
   }
 
@@ -175,23 +137,12 @@ object IncrementalSketches {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestQuantilesBatch(spark, batch, storeDir, shardCols, valueCol,
-            batchId = Some(bid), k = k, probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir)), checkpointLocation,
+      compactEvery, asyncCompact = asyncCompact) { (batch, bid, probe) =>
+      ingestQuantilesBatch(arriving.sparkSession, batch, storeDir, shardCols, valueCol,
+        batchId = Some(bid), k = k, probeReplay = probe)
+    }
 
   /** Attach the sketch maintenance loop to a stream — same
     * `compactEvery`/`asyncCompact` cadence as [[attachQuantiles]].
@@ -205,21 +156,10 @@ object IncrementalSketches {
       checkpointLocation: Option[String] = None,
       compactEvery: Option[Int] = None,
       asyncCompact: Boolean = false
-  ): StreamingQuery = {
-    val spark = arriving.sparkSession
-    val cadence = new CompactCadence(spark, storeDir, compactEvery, asyncCompact)
-    val probe = new StoreGuard.ReplayProbe
-    val writer = arriving.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cadence.finishPending(bid)
-        if (ingestBatch(spark, batch, storeDir, shardCols, valueCol,
-            batchId = Some(bid), lgK = lgK, probeReplay = probe.needed))
-          probe.ingested()
-        cadence.maybeCompact(bid)
-      }
-    checkpointLocation
-      .fold(writer)(c => writer.option("checkpointLocation", c))
-      .start()
-  }
+  ): StreamingQuery =
+    StoreLoop.attach(arriving, Seq(StoreLoop.Store(storeDir)), checkpointLocation,
+      compactEvery, asyncCompact = asyncCompact) { (batch, bid, probe) =>
+      ingestBatch(arriving.sparkSession, batch, storeDir, shardCols, valueCol,
+        batchId = Some(bid), lgK = lgK, probeReplay = probe)
+    }
 }

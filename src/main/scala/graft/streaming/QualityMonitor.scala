@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QualityMonitor {
 
-  private[graft] val BatchCol = "ingest_batch"
+  private[graft] val BatchCol = StoreGuard.BatchCol
 
   /** Score one micro-batch; append its report rows. */
   def scoreBatch(

@@ -77,9 +77,11 @@ object RuntimeEventBus extends RuntimeEventSink {
     * count of a maintenance rewrite) through the bus, so loop health is
     * sinkable without parsing stdout. `entity` is the store directory —
     * the one name a multi-loop deployment can always correlate on. The
-    * `rows` payload is BY-NAME and only evaluated when [[hasSinks]]:
-    * counting an appended frame costs one batch-sized pass, which an
-    * unobserved loop must not pay.
+    * store loops pass a count they already hold ([[StoreLoop.append]]
+    * counts its materialized frame to size the append), so observing a
+    * loop adds no pass over the batch. `rows` stays BY-NAME and is only
+    * evaluated when [[hasSinks]], so an emitter without a ready count
+    * costs nothing while nobody listens.
     */
   def ingested(entity: String, batchId: Option[Long], rows: => Long): Unit =
     if (hasSinks)

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
-/** Replay-idempotence guard shared by the incremental stores
-  * (IncrementalBm25 / IncrementalSketches / DriftMonitor /
-  * QualityMonitor / StreamingCuration / IncrementalScd2).
+/** Replay-idempotence guard shared by every batch-stamped store: the
+  * eight incremental store loops (through [[StoreLoop]]), DriftMonitor,
+  * QualityMonitor and StreamingCuration.
   *
   * Deliberately filesystem-AGNOSTIC: a `java.io.File(dir).exists()`
   * probe is local-only — on HDFS/S3 it always answers false, so a
@@ -24,6 +24,9 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   * micro-batch and let the streaming restart policy retry.
   */
 private[streaming] object StoreGuard {
+
+  /** The batch-id stamp column every stamped store carries. */
+  val BatchCol = "ingest_batch"
 
   /** Size an append's file fan-out from an already-known row count:
     * one file per ~50k rows, capped at the shuffle-partition count —
@@ -51,9 +54,11 @@ private[streaming] object StoreGuard {
     * contains `b`.
     */
   def hasBatch(spark: SparkSession, dir: String, batchCol: String, b: Long): Boolean =
-    readStore(spark, dir).exists { df =>
-      df.columns.contains(batchCol) && !df.filter(col(batchCol) === lit(b)).isEmpty
-    }
+    readStore(spark, dir).exists(hasBatch(_, batchCol, b))
+
+  /** True iff the already-read store `df` has a `batchCol` holding `b`. */
+  def hasBatch(df: DataFrame, batchCol: String, b: Long): Boolean =
+    df.columns.contains(batchCol) && !df.filter(col(batchCol) === lit(b)).isEmpty
 
   /** Per-attach memoization of the replay probe: within ONE streaming
     * run, `foreachBatch` delivers strictly increasing batch ids and a

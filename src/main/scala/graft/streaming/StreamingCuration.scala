@@ -30,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StreamingCuration {
 
-  private val BatchCol = IncrementalDedup.BatchCol
+  private val BatchCol = StoreGuard.BatchCol
 
   private def hasBatch(spark: SparkSession, dir: String, b: Long): Boolean =
     StoreGuard.hasBatch(spark, dir, BatchCol, b)

@@ -171,6 +171,9 @@ class RuntimeEventBusSpec extends SparkSpec {
         s"$root/hll", Seq("source"), "token", batchId = Some(0L))
       IncrementalGraph.ingestBatch(spark,
         Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), s"$root/graph", batchId = Some(0L))
+      IncrementalSketches.ingestQuantilesBatch(spark,
+        Seq(("s1", 1.0), ("s2", 2.0)).toDF("source", "v"),
+        s"$root/kll", Seq("source"), "v", batchId = Some(0L))
       IncrementalDedup.seed(
         Seq((100L, "some seed document text with enough distinct words to shingle properly"))
           .toDF("doc_id", "text"),
@@ -182,7 +185,7 @@ class RuntimeEventBusSpec extends SparkSpec {
 
       val byEntity = sink.events.asScala
         .filter(_.name == "batch.ingested").map(e => e.entity -> e).toMap
-      for (store <- Seq("bm25", "ann", "scd2", "manifest", "dsir", "hll", "graph", "corpus")) {
+      for (store <- Seq("bm25", "ann", "scd2", "manifest", "dsir", "hll", "kll", "graph", "corpus")) {
         val e = byEntity.getOrElse(s"$root/$store",
           fail(s"no batch.ingested for $store; got ${byEntity.keys}"))
         assert(e.batchId.contains(0L) && e.success.contains(true), s"$store: $e")
